@@ -39,10 +39,10 @@ All pure DataFrame (zero UDFs), all oracle-gated:
   difference between a star-graph blowup and a linear pass at crawl
   scale.
 - `maintain_transitive_closure` / `read_transitive_closure` — the
-  closure made stateful for batch-arriving edges: O(delta) work and
-  O(delta) LSM seg appends per fold, compact-every-8 (the
-  maintain_overlap_index layout; BENCH.md: late/early 1.05 over 8
-  folds).
+  closure made stateful for batch-arriving edges: joins over the
+  delta only and O(delta) LSM seg appends per fold, compact-every-8
+  (the maintain_overlap_index layout; BENCH.md: late/early 1.05 over
+  8 folds). The parts are disjoint, so a read is one parquet scan.
 - `shortest_paths` — bounded-hop min-plus doubling (the closure's
   semiring twin): k-hop neighborhood distances, cycles included.
 - `khop_aggregate` — GNN-style message passing: per-node exact
@@ -57,10 +57,52 @@ All pure DataFrame (zero UDFs), all oracle-gated:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+import os
+import re
+import shutil
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 VAR_PREFIX = "?"
+# byte suffixes of Spark size confs ("10485760b", "64m", "1g")
+_BYTE_UNITS = {"": 1, "b": 1} | {
+    u + b: 1024**i for i, u in enumerate("kmgtp", 1) for b in ("", "b")
+}
+
+
+def _checkpoint_count(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eager localCheckpoint of `df` and its row count from ONE job: an
+    observe() counter rides the checkpoint's own pass instead of a
+    second count() job over the checkpointed blocks."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return out, obs.get["n"]
+
+
+def _doubling_rounds(max_depth: int) -> int:
+    """Growing rounds a doubling fixpoint may take: after k rounds it
+    covers every path of length <= 2^k, so an input whose paths are at
+    most max_depth long stops growing within ceil(log2(max_depth)) + 1
+    rounds; one more growing round means a cycle or a deeper input
+    than promised."""
+    return max(1, math.ceil(math.log2(max(2, max_depth))) + 1)
+
+
+def _broadcast_threshold(spark) -> int:
+    """The byte threshold AQE applies to a join side after shuffling it:
+    spark.sql.adaptive.autoBroadcastJoinThreshold when set (it reads
+    back None when unset), else the plan-time
+    spark.sql.autoBroadcastJoinThreshold (whose default reads back as
+    '10485760b'). Negative disables broadcasting."""
+    raw = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold") or (
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    )
+    m = re.fullmatch(r"(-?\d+)([a-z]*)", str(raw).strip().lower())
+    if not m or m.group(2) not in _BYTE_UNITS:
+        raise ValueError(f"unreadable broadcast join threshold {raw!r}")
+    return int(m.group(1)) * _BYTE_UNITS[m.group(2)]
 
 
 def _pattern_legs(patterns):
@@ -121,7 +163,9 @@ def bgp_match(
     one-or-more, e.g. "partOf+") turns that leg into the TRANSITIVE
     CLOSURE of the base predicate's edges — iterative doubling over
     the pred-filtered scan (set semantics for the reachability pairs,
-    matching SPARQL's path semantics), then joined like any other leg.
+    matching SPARQL's path semantics), then joined like any other leg;
+    max_depth bounds the shortest path such a leg may need
+    (reachability_pairs raises past it).
 
     Scale shape: each pattern is one filtered projection of the
     triples scan — a literal pred reaches the parquet scan as a
@@ -195,23 +239,18 @@ def reachability_pairs(
     set — set semantics, CYCLE-SAFE (the SPARQL "one-or-more" path
     evaluation): iterative doubling over distinct pairs, converging
     when the pair count stops growing. The state space is finite
-    (<= n^2 pairs), so convergence needs no acyclicity assumption —
-    unlike transitive_closure, whose exact-depth contract makes cycles
-    divergent by construction. max_depth only bounds the path length
-    that must be covered (ceil(log2) + 1 doubling rounds); the
-    fixpoint itself always terminates: doubling adds no new pair only
-    at the full fixpoint, and the covered path length doubles per
-    round, so the loop runs at most ceil(log2(longest shortest
-    path)) <= log2(n) growing rounds regardless of max_depth."""
-    pairs = (
+    (<= n^2 pairs), so a cycle converges too — unlike
+    transitive_closure, whose exact-depth contract makes cycles
+    divergent by construction. After k rounds every pair joined by a
+    path of <= 2^k edges is present, so max_depth bounds the shortest
+    path the input may need: ValueError when the pairs are still
+    growing after ceil(log2(max_depth)) + 1 rounds."""
+    pairs, n = _checkpoint_count(
         edges.select(F.col(src_col).alias("subj"), F.col(dst_col).alias("obj"))
         .where(F.col("subj").isNotNull() & F.col("obj").isNotNull())
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    del max_depth  # kept for signature symmetry; convergence is count-driven
-    n = pairs.count()
-    while True:
+    for _ in range(_doubling_rounds(max_depth) + 1):
         grown = (
             pairs.alias("a")
             .join(
@@ -222,15 +261,35 @@ def reachability_pairs(
             )
             .select(F.col("a.subj").alias("subj"), F.col("_obj2").alias("obj"))
         )
-        new_pairs = (
-            pairs.unionByName(grown).distinct().localCheckpoint(eager=True)
-        )
-        new_n = new_pairs.count()
-        pairs = new_pairs
+        pairs, new_n = _checkpoint_count(pairs.unionByName(grown).distinct())
         if new_n == n:
-            break
+            return pairs
         n = new_n
-    return pairs
+    raise ValueError(
+        f"reachability_pairs: still growing past max_depth={max_depth} — "
+        "paths longer than promised; raise max_depth"
+    )
+
+
+def _compose(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Paths of `a` extended by paths of `b`: (node, ancestor, depth)
+    rows joined where a's ancestor is b's node, depths added."""
+    return (
+        a.alias("x")
+        .join(
+            b.select(
+                F.col("node").alias("_mid"),
+                F.col("ancestor").alias("_anc"),
+                F.col("depth").alias("_d"),
+            ),
+            F.col("x.ancestor") == F.col("_mid"),
+        )
+        .select(
+            F.col("x.node").alias("node"),
+            F.col("_anc").alias("ancestor"),
+            (F.col("x.depth") + F.col("_d")).alias("depth"),
+        )
+    )
 
 
 def transitive_closure(
@@ -249,11 +308,12 @@ def transitive_closure(
     twin of components.py's pointer jumping (a 4000-deep chain needs 12
     rounds, not 4000). On an acyclic input every (node, ancestor) pair
     has a UNIQUE path, so the union needs only distinct(), no min();
-    a cycle would diverge, hence the max_depth guard raises rather
-    than looping forever. localCheckpoint per round truncates lineage
-    (the components.py discipline); the closure's output size is the
+    a cycle would diverge, hence ValueError when the closure is still
+    growing after ceil(log2(max_depth)) + 1 rounds rather than looping
+    forever. localCheckpoint per round truncates lineage (the
+    components.py discipline); the closure's output size is the
     inherent O(n * depth) of the answer itself."""
-    paths = (
+    paths, n = _checkpoint_count(
         edges.select(
             F.col(src_col).alias("node"),
             F.col(dst_col).alias("ancestor"),
@@ -261,36 +321,11 @@ def transitive_closure(
         )
         .where(F.col("node").isNotNull() & F.col("ancestor").isNotNull())
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    import math
-
-    # after k growth rounds the closure covers every depth <= 2^k, so
-    # an acyclic input of depth <= max_depth must stop growing within
-    # ceil(log2(max_depth)) + 1 rounds; one more growing round means a
-    # cycle or a deeper hierarchy than promised
-    max_rounds = max(1, math.ceil(math.log2(max(2, max_depth))) + 1)
-    n = paths.count()
-    for _ in range(max_rounds + 1):
-        grown = (
-            paths.alias("a")
-            .join(
-                paths.select(
-                    F.col("node").alias("_mid"),
-                    F.col("ancestor").alias("_anc2"),
-                    F.col("depth").alias("_d2"),
-                ).alias("b"),
-                F.col("a.ancestor") == F.col("_mid"),
-            )
-            .select(
-                F.col("a.node").alias("node"),
-                F.col("_anc2").alias("ancestor"),
-                (F.col("a.depth") + F.col("_d2")).alias("depth"),
-            )
+    for _ in range(_doubling_rounds(max_depth) + 1):
+        paths, new_n = _checkpoint_count(
+            paths.unionByName(_compose(paths, paths)).distinct()
         )
-        new_paths = paths.unionByName(grown).distinct().localCheckpoint(eager=True)
-        new_n = new_paths.count()
-        paths = new_paths
         if new_n == n:
             return paths
         n = new_n
@@ -304,10 +339,10 @@ def _closure_parts(state_path: str):
     """(newest base dir or None, ordered seg dirs, next fold number)
     for the LSM closure layout: `base-v<n>/` holds a compacted
     closure, `seg-<n>/` holds one fold's delta. Read = newest base u
-    all segs (duplicates from a crash between compaction rename and
-    seg cleanup are absorbed by distinct on read)."""
-    import os
-
+    the segs numbered above it: a seg numbered at or below the base
+    version was absorbed by that compaction (a crash between the
+    compaction rename and seg cleanup leaves it on disk), so skipping
+    it by number keeps the parts disjoint."""
     bases, segs = [], []
     if os.path.isdir(state_path):
         for d in os.listdir(state_path):
@@ -332,19 +367,16 @@ def _closure_parts(state_path: str):
 
 def read_transitive_closure(spark, state_path: str) -> DataFrame | None:
     """Current maintained closure: newest compacted base plus the
-    append-log segments since it, distinct (absorbs the
-    compaction-crash duplicate window). None when no state exists."""
-    import os
-
+    append-log segments since it, as one parquet scan with no
+    distinct — the parts are disjoint by construction (each seg holds
+    a fold's new rows minus the closure it was folded against, and
+    _closure_parts drops absorbed segs by number). None when no state
+    exists."""
     base, segs, _ = _closure_parts(state_path)
     parts = ([base] if base else []) + segs
     if not parts:
         return None
-    df = None
-    for p in parts:
-        part = spark.read.parquet(os.path.join(state_path, p))
-        df = part if df is None else df.unionByName(part)
-    return df.distinct()
+    return spark.read.parquet(*(os.path.join(state_path, p) for p in parts))
 
 
 def maintain_transitive_closure(
@@ -362,7 +394,7 @@ def maintain_transitive_closure(
     containment edges batch by batch. Returns the full updated
     closure.
 
-    Per-batch work is proportional to the DELTA closure, not the
+    Per-batch joins are proportional to the DELTA closure, not the
     graph: with C the stored closure and N0 the batch edges, iterate
 
         N_{k+1} = N_k  u  N_k.C  u  C.N_k  u  N_k.N_k   (minus C)
@@ -373,7 +405,8 @@ def maintain_transitive_closure(
     converges in ceil(log2(new-edge segments)) rounds. Joins are only
     delta x closure / delta x delta; the stored closure is never
     re-derived. Acyclic contract as transitive_closure (cycle ->
-    ValueError via max_depth growth guard).
+    ValueError via max_depth growth guard). Per round, "minus C" and
+    the dedup are one aggregate, counted by its checkpoint's observe().
 
     State is LSM-SHAPED like maintain_overlap_index (dedup.py): each
     fold appends ONLY its delta as `seg-<n>/` (O(delta) write — the
@@ -382,90 +415,56 @@ def maintain_transitive_closure(
     `compact_every` folds the base+segs merge into a new `base-v<n>/`
     (amortized O(closure / compact_every) per fold). Crash windows:
     seg and base writes are staged-then-renamed; a crash between the
-    compaction rename and seg cleanup leaves duplicate rows that
-    distinct-on-read absorbs exactly.
+    compaction rename and seg cleanup leaves absorbed segs on disk,
+    which _closure_parts skips by version number.
 
     Idempotent replay for free: a replayed batch's paths are already
     rows of C, so the delta shrinks to empty and the fold writes
     nothing at all."""
-    import os
-    import shutil
-
-    fresh = (
-        edge_batch.select(
-            F.col(src_col).alias("node"),
-            F.col(dst_col).alias("ancestor"),
-            F.lit(1).cast("long").alias("depth"),
-        )
-        .where(F.col("node").isNotNull() & F.col("ancestor").isNotNull())
-        .distinct()
-    )
+    fresh = edge_batch.select(
+        F.col(src_col).alias("node"),
+        F.col(dst_col).alias("ancestor"),
+        F.lit(1).cast("long").alias("depth"),
+    ).where(F.col("node").isNotNull() & F.col("ancestor").isNotNull())
     base, segs, nxt = _closure_parts(state_path)
     stored = read_transitive_closure(spark, state_path)
-    # pin the view ONCE: the delta loop probes the closure in ~3 joins
-    # per round — without this, every probe re-reads base + segs from
-    # parquet and re-runs the distinct
+    # pin the view ONCE: every round probes the closure in a join and
+    # the set difference — without this, each probe re-reads base +
+    # segs from parquet
     closure = (
-        stored.localCheckpoint(eager=True)
-        if stored is not None
-        else fresh.limit(0)
+        stored.localCheckpoint(eager=True) if stored is not None else fresh.limit(0)
     )
 
-    def _minus(a: DataFrame, b: DataFrame) -> DataFrame:
-        # subtract on the FULL (node, ancestor, depth) triple: on a DAG
-        # a pair can be reachable at several depths and the from-scratch
-        # closure keeps every one — dropping by pair would lose the new
-        # depths and break chained == scratch. left_anti IS that
-        # subtract (same rows as the historical left-join +
-        # null-filter, one fewer projected column and no post-filter).
-        return a.join(
-            b.select("node", "ancestor", "depth"),
-            ["node", "ancestor", "depth"],
-            "left_anti",
-        )
-
-    def _compose(a: DataFrame, b: DataFrame) -> DataFrame:
+    def _new_rows(cand: DataFrame) -> DataFrame:
+        # candidates minus C, deduplicated, as ONE aggregate over the
+        # FULL (node, ancestor, depth) triple: on a DAG a pair can be
+        # reachable at several depths and the from-scratch closure
+        # keeps every one — dropping by pair would lose the new depths
         return (
-            a.alias("x")
-            .join(
-                b.select(
-                    F.col("node").alias("_mid"),
-                    F.col("ancestor").alias("_anc"),
-                    F.col("depth").alias("_d"),
-                ),
-                F.col("x.ancestor") == F.col("_mid"),
-            )
-            .select(
-                F.col("x.node").alias("node"),
-                F.col("_anc").alias("ancestor"),
-                (F.col("x.depth") + F.col("_d")).alias("depth"),
-            )
+            cand.withColumn("_in_c", F.lit(0))
+            .unionByName(closure.withColumn("_in_c", F.lit(1)))
+            .groupBy("node", "ancestor", "depth")
+            .agg(F.max("_in_c").alias("_in_c"))
+            .where(F.col("_in_c") == 0)
+            .drop("_in_c")
         )
 
-    import math
-
-    delta = _minus(fresh, closure).localCheckpoint(eager=True)
-    n_delta = delta.count()
-    # same round bound as transitive_closure: each growing round
-    # doubles the number of new-edge segments a discovered path can
-    # contain, so an acyclic fold stabilizes within
-    # ceil(log2(max_depth)) + 1 rounds
-    rounds_left = max(1, math.ceil(math.log2(max(2, max_depth))) + 1)
+    threshold = _broadcast_threshold(spark)
+    row_bytes = 8 + fresh._jdf.schema().defaultSize()  # Spark's row estimate
+    delta, n_delta = _checkpoint_count(_new_rows(fresh))
+    rounds_left = _doubling_rounds(max_depth)
     while n_delta:
+        # a checkpointed delta plans at its pre-checkpoint estimate, so
+        # the planner shuffles both join sides before AQE switches to
+        # the broadcast its real size allows; hint that choice up front
+        small = F.broadcast(delta) if n_delta * row_bytes <= threshold else delta
         # N.(C u N) == N.C u N.N — two joins instead of three per round
-        # (one exchange + union arm saved; identical grown set)
-        grown = (
-            _compose(delta, closure.unionByName(delta))
-            .unionByName(_compose(closure, delta))
-            .distinct()
+        grown = _compose(small, closure.unionByName(delta)).unionByName(
+            _compose(closure, small)
         )
-        new_delta = (
-            _minus(grown, closure)
-            .unionByName(delta)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        new_n = new_delta.count()
+        # delta is disjoint from C, so (grown u N) minus C ==
+        # (grown minus C) u N
+        new_delta, new_n = _checkpoint_count(_new_rows(grown.unionByName(delta)))
         if new_n == n_delta:
             break
         delta, n_delta = new_delta, new_n
@@ -497,10 +496,11 @@ def maintain_transitive_closure(
     # the fold itself writes O(delta)
     updated = closure.unionByName(delta)
     if len(segs) + 1 >= compact_every:
-        # compaction: merge base + segs + this delta into a new base,
-        # THEN drop the absorbed parts — leftover segs have numbers
-        # <= the new base version, so reads exclude them exactly
-        _staged_write(updated.distinct(), f"base-v{nxt}")
+        # compaction: merge base + segs + this delta (disjoint, so no
+        # distinct) into a new base, THEN drop the absorbed parts —
+        # leftover segs have numbers <= the new base version, so reads
+        # exclude them exactly
+        _staged_write(updated, f"base-v{nxt}")
         for d in ([base] if base else []) + segs + [f"seg-{nxt}"]:
             shutil.rmtree(os.path.join(state_path, d), ignore_errors=True)
     return updated
@@ -631,8 +631,6 @@ def shortest_paths(
     localCheckpoint per round (the components.py discipline)."""
     if max_hops < 1:
         raise ValueError(f"shortest_paths: max_hops must be >= 1, got {max_hops}")
-    import math
-
     d = (
         edges.select(
             F.col(src_col).alias("src"),

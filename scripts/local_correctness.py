@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 from pathlib import Path
@@ -43,17 +44,11 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as e
+    from mel_tnnt_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("local-correctness")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    # the engine's own session config, one worker thread per core
+    spark = get_spark("local-correctness", master=f"local[{os.cpu_count()}]")
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = e.queries()

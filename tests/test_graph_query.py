@@ -118,6 +118,17 @@ def test_bgp_property_path_cyclic_predicate(spark):
     }
 
 
+def test_bgp_property_path_longer_than_max_depth_raises(spark):
+    """A 'p+' leg honours bgp_match's max_depth: a 40-edge chain under
+    max_depth=4 is still growing after ceil(log2(4)) + 1 rounds."""
+    rows = [(f"n{i}", "next", f"n{i + 1}") for i in range(40)]
+    t = spark.createDataFrame(rows, "subj string, pred string, obj string")
+    with pytest.raises(ValueError, match="max_depth=4"):
+        bgp_match(t, [("?s", "next+", "?t")], max_depth=4)
+    got = bgp_match(t, [("?s", "next+", "?t")], max_depth=64)
+    assert got.count() == 40 * 41 // 2
+
+
 def test_bgp_errors(triples):
     with pytest.raises(ValueError, match="disconnected"):
         bgp_match(
@@ -292,7 +303,79 @@ def _closure_ref(edge_list):
     return triples
 
 
-def test_maintain_closure_chained_equals_scratch_any_order(spark, tmp_path):
+@pytest.fixture(params=["default", "unset", "disabled"])
+def broadcast_threshold(request, spark):
+    """The fold's broadcast hint under three threshold settings: the
+    session's 64 MB AQE threshold; both threshold keys unset (the AQE
+    key reads back None and the plan-time one '10485760b'); AQE
+    broadcasting disabled with -1. Restores both keys afterwards."""
+    keys = (
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+        "spark.sql.autoBroadcastJoinThreshold",
+    )
+    saved = {k: spark.conf.get(k) for k in keys}
+    if request.param == "unset":
+        for k in keys:
+            spark.conf.unset(k)
+    elif request.param == "disabled":
+        spark.conf.set(keys[0], "-1")
+    yield request.param
+    for k, v in saved.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+def test_broadcast_threshold_reads_spark_conf(spark, broadcast_threshold):
+    from mel_tnnt_spark.operators.graph_query import _broadcast_threshold
+
+    want = {"default": 64 << 20, "unset": 10 << 20, "disabled": -1}
+    assert _broadcast_threshold(spark) == want[broadcast_threshold]
+
+
+def test_checkpoint_count_matches_count(spark):
+    from mel_tnnt_spark.operators.graph_query import _checkpoint_count
+
+    empty, n = _checkpoint_count(spark.range(10).where(F.col("id") > 99))
+    assert n == 0 and empty.count() == 0
+    df = spark.range(0, 1000, 1, numPartitions=7).where(F.col("id") % 3 != 0)
+    out, n = _checkpoint_count(df)
+    assert n == df.count() == out.count() == 666
+
+
+def test_maintain_closure_fold_job_budget(spark, tmp_path):
+    """q106's shape: a 1000-node ternary tree folded in 3 interleaved
+    slices (child mod 3), counted under one job group. The fold loop
+    that ran a count() after every checkpoint and a three-exchange set
+    difference took 129 jobs here; with observe()-counted checkpoints,
+    the one-aggregate difference and the delta broadcast at plan time
+    it takes 56. The bound leaves a little slack for AQE."""
+    from mel_tnnt_spark.operators.graph_query import maintain_transitive_closure
+
+    edges = spark.range(1, 1000).select(
+        F.col("id").alias("child"), F.expr("(id - 1) div 3").alias("parent")
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("closure-fold-jobs", "fold job budget")
+    try:
+        for part in range(3):
+            out = maintain_transitive_closure(
+                spark, str(tmp_path / "closure"),
+                edges.where(F.col("child") % 3 == part),
+                "child", "parent", max_depth=64,
+            )
+        jobs = len(sc.statusTracker().getJobIdsForGroup("closure-fold-jobs"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs <= 60
+    assert out.count() == 5457
+
+
+def test_maintain_closure_chained_equals_scratch_any_order(
+    spark, tmp_path, broadcast_threshold
+):
     rng = random.Random(19)
     # ternary tree + extra skip edges => DAG with multi-depth pairs
     edge_list = [(i, (i - 1) // 3) for i in range(1, 60)]
@@ -335,7 +418,9 @@ def test_maintain_closure_chained_equals_scratch_any_order(spark, tmp_path):
     assert persisted == got
 
 
-def test_maintain_closure_multi_depth_pair_kept(spark, tmp_path):
+def test_maintain_closure_multi_depth_pair_kept(
+    spark, tmp_path, broadcast_threshold
+):
     # a->b then (b->c, a->c) in a second batch: pair (a, c) is
     # reachable at depth 1 AND 2 — both triples must survive the fold
     from mel_tnnt_spark.operators.graph_query import maintain_transitive_closure
